@@ -1,0 +1,4 @@
+"""Harvest benchmark: seeded crawl, bulk-fetch and hub-build workloads.
+
+Run ``python3 perfbench/run.py --workload <name> --seed <n> --seconds <s>
+--trace <0|1>`` from the repository root; see ``perfbench/README.md``."""
