@@ -646,15 +646,12 @@ def run_soak_crawl_delta(ttl_rounds: int | None = None,
     per-round selection ~10/host, so the frontier stays ~2M rows
     throughout — the regime where snapshot rewrites dominate.
 
-    With ``ttl_rounds`` (the --soak-crawl-ttl mode, r6 verdict task 7):
-    both runs switch to the CUCKOO seen filter with
+    With ``ttl_rounds`` (the --soak-crawl-ttl mode): both runs set
     recrawl_ttl_rounds=ttl_rounds over ``rounds`` (default 12) rounds,
     so keys seen in early rounds expire MID-RUN and every subsequent
-    round executes the guarded cuckoo delete (live-key verification +
-    collision rebuild, operators/cuckoo.py:301) against the full ~2M-key
-    active set inside the loop. Reported extras: per-round expiry
-    counts, the cumulative guarded-delete segment-rebuild count, and
-    how many URLs were re-fetched after expiring.
+    round confirms bloom positives against the horizon-filtered ~2M-key
+    active seen set inside the loop. Reported extra: how many URLs were
+    re-fetched after expiring.
     Pre-run artifact (minutes-long): the per-driver bench embeds the
     JSON on its own stdout line."""
     import shutil
@@ -696,10 +693,7 @@ def run_soak_crawl_delta(ttl_rounds: int | None = None,
 
     n_rounds = rounds if rounds is not None else (
         12 if ttl_rounds is not None else SOAK_DELTA_ROUNDS)
-    ttl_extra = (
-        {"seen_filter": "cuckoo", "recrawl_ttl_rounds": ttl_rounds}
-        if ttl_rounds is not None else {}
-    )
+    ttl_extra = {"recrawl_ttl_rounds": ttl_rounds} if ttl_rounds is not None else {}
     modes = {}
     sigs = {}
     for mode, extra in (
@@ -724,8 +718,6 @@ def run_soak_crawl_delta(ttl_rounds: int | None = None,
             "frontier_bytes_written": _frontier_bytes(d),
         }
         if ttl_rounds is not None:
-            modes[mode]["cuckoo_rebuilds_total"] = metas[-1].get(
-                "cuckoo_rebuilds_total", 0)
             # URLs fetched MORE than once = expiry -> re-discovery ->
             # re-fetch actually happened inside the loop
             order = run.crawl_order()
@@ -983,32 +975,25 @@ def _soak_sections() -> str:
         sn, de = d["modes"]["snapshot"], d["modes"]["delta"]
         gb = 1024 ** 3
         out.append(f"""
-## TTL-expiry soak: guarded cuckoo delete inside the loop at {d['seeds'] // 10**6}M keys
+## TTL-expiry soak: in-loop expiry at {d['seeds'] // 10**6}M keys
 
 `python bench.py --soak-crawl-ttl {d['recrawl_ttl_rounds']} {d['rounds']}` — the {d['seeds'] // 10**6}M-seed /
-{d['hosts']}-host delta soak over {d['rounds']} rounds with `seen_filter="cuckoo"`
-and `recrawl_ttl_rounds={d['recrawl_ttl_rounds']}`: the round-0 cohort ({d['seeds']:,} keys)
-expires MID-RUN and every later round executes the guarded fingerprint
-delete (live-key verification + collision rebuild) against the full
-active set inside the crawl loop. Full artifact: `{p}`.
+{d['hosts']}-host delta soak over {d['rounds']} rounds with
+`recrawl_ttl_rounds={d['recrawl_ttl_rounds']}`: the round-0 cohort ({d['seeds']:,} keys)
+expires MID-RUN and every later round confirms seen-filter positives
+against the horizon-filtered active set inside the crawl loop. Full
+artifact: `{p}`.
 
 | metric | snapshot mode | delta mode |
 |---|---|---|
 | total wall ({d['rounds']} rounds) | {sn['total_s']:.1f} s | {de['total_s']:.1f} s |
 | frontier bytes written | {sn['frontier_bytes_written'] / gb:.2f} GB | {de['frontier_bytes_written'] / gb:.2f} GB |
 | order/seen/docs signatures | IDENTICAL across modes | IDENTICAL |
-| guarded-delete segment rebuilds | {sn['cuckoo_rebuilds_total']} | {de['cuckoo_rebuilds_total']} |
 | re-fetched URLs | {sn['refetched_urls']} | {de['refetched_urls']} |
 
-Zero guard rebuilds is the expected outcome for partial-key cuckoo
-tables: two keys sharing a 16-bit fingerprint share the same bucket
-PAIR, so deleting one copy leaves the other present and the live key
-still probes positive; a live-key false negative needs a double
-collision. The guard's rebuild path is exercised by the
-forced-collision property test (tests/test_cuckoo.py); genuine
-re-fetch-after-expiry (zero here — the open 10^7 URL space never
-re-proposes expired keys organically) is exercised by the closed-ring
-integration test
+Genuine re-fetch-after-expiry (zero here — the open 10^7 URL space
+never re-proposes expired keys organically) is exercised by the
+closed-ring integration test
 (tests/test_crawl_oracle.py::test_crawl_recrawl_ttl_in_loop).
 """)
     p = "BENCH/soak_crawl_delta.json"

@@ -55,8 +55,7 @@ def run(names: list[str], passes: int = 2, tag: str | None = None) -> dict:
             jobs = len(tracker.getJobIdsForGroup(group))
             sc.setJobGroup("idle", "idle")
             if best is None or dt < best:
-                best = dt
-            njobs = jobs
+                best, njobs = dt, jobs
         if tag:
             import contextlib
             import io

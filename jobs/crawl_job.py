@@ -2,7 +2,7 @@
 
     spark-submit --py-files nde_crawlers_spark.zip jobs/crawl_job.py \
         --run-dir /data/crawl/run1 --seeds 100000 --hosts 500 \
-        --rounds 5 --round-seconds 30 [--resume] [--bloom]
+        --rounds 5 --round-seconds 30 [--resume] [--no-autothrottle]
 
 On a cluster, drop --master handling and submit against YARN/K8s; the
 engine itself is agnostic — all state lives under --run-dir (parquet in
@@ -30,14 +30,9 @@ def main(argv: list[str] | None = None) -> int:
     p.add_argument("--round-seconds", type=int, default=30, help="politeness budget window")
     p.add_argument("--cores", type=int, default=None, help="local[] cores; omit on a cluster")
     p.add_argument("--resume", action="store_true")
-    # segmented bloom prefilter and AutoThrottle are the SHIPPED
-    # defaults (CrawlConfig); the flags below turn them off
-    p.add_argument("--no-bloom", action="store_true",
-                   help="disable the segmented bloom prefilter (exact anti-join only)")
+    # AutoThrottle is the SHIPPED default (CrawlConfig); this turns it off
     p.add_argument("--no-autothrottle", action="store_true",
                    help="disable per-host AutoThrottle delay adaptation")
-    p.add_argument("--seen-filter", choices=["bloom", "cuckoo"], default="bloom",
-                   help="partitioned membership prefilter flavor")
     args = p.parse_args(argv)
 
     from nde_crawlers_spark.plans.crawl import CrawlConfig, CrawlRun
@@ -50,8 +45,6 @@ def main(argv: list[str] | None = None) -> int:
         num_hosts=args.hosts,
         round_seconds=args.round_seconds,
         max_rounds=args.rounds,
-        use_bloom=not args.no_bloom,
-        seen_filter=args.seen_filter,
         autothrottle=not args.no_autothrottle,
     )
     run = CrawlRun(spark, args.run_dir, cfg)

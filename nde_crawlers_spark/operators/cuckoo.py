@@ -1,11 +1,13 @@
-"""Cuckoo filter: the deletable alternative to the bloom prefilter.
+"""Cuckoo filter: a deletable membership filter for TTL expiry.
 
-The north-star design names a "partitioned cuckoo/bloom URL-seen
-filter". Bloom (operators/seen.py) is append-only; a cuckoo filter also
-supports DELETE, which matters for the engine's recrawl story: when a
-URL's cache TTL expires (EXPIRE, figshare_oai-pmh/files/sql_database.py:75)
-it must become fetchable again — with a bloom you rebuild the whole
-filter, with a cuckoo you evict one fingerprint.
+Bloom (operators/seen.py) is append-only; a cuckoo filter also supports
+DELETE: when a URL's cache TTL expires (EXPIRE,
+figshare_oai-pmh/files/sql_database.py:75) its fingerprint can be
+evicted instead of rebuilding the filter. Deletion only matters where
+the filter's answer is final; the crawl plan confirms every bloom
+positive against the ACTIVE seen set, so it expires keys without any
+deletion and uses the bloom alone. This module backs the catalog query
+``crawl_recrawl_ttl`` (queries.py), oracle-checked like every entry.
 
 Vectorized numpy implementation (buckets x slots of uint16 fingerprints)
 with the standard partial-cuckoo-hashing layout:
@@ -14,9 +16,7 @@ with the standard partial-cuckoo-hashing layout:
     b2 = b1 XOR hash(fingerprint) mod nbuckets     (partner bucket)
 
 so membership needs only (fingerprint, one bucket index) — and eviction
-relocation never re-reads the key. Same integration points as the bloom:
-build over the seen delta per partition (Arrow batches), OR... cuckoo
-tables merge by re-inserting fingerprints; probe via broadcast bytes.
+relocation never re-reads the key.
 
 False positives (~2^-16 per slot probed) are confirmed by the exact
 anti-join, exactly like the bloom path — a false positive can cost a
@@ -168,10 +168,9 @@ class CuckooFilter:
 
 # --------------------- segmented (partitioned) cuckoo ---------------------
 #
-# The north rule names a "partitioned cuckoo/bloom URL-seen filter". The
-# bloom side lives as per-bucket segments (operators/seen.py); this is
+# The bloom lives as per-bucket segments (operators/seen.py); this is
 # the same partitioned layout for the cuckoo filter — one serialized
-# filter per url_hash segment, built/maintained/probled executor-side
+# filter per url_hash segment, built/probed/deleted-from executor-side
 # with applyInPandas/cogroup, never a driver-resident table — plus the
 # capability blooms lack: DELETE. When a URL's cache TTL expires
 # (EXPIRE, figshare_oai-pmh/files/sql_database.py:75) its fingerprint is
@@ -186,6 +185,8 @@ from pyspark.sql import DataFrame  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
 from pyspark.sql import types as T  # noqa: E402
 
+from .seen import confirm_unseen, segment_of  # noqa: E402
+
 CUCKOO_SEGMENT_SCHEMA = T.StructType([
     T.StructField("seg", T.IntegerType()),
     T.StructField("nseg", T.IntegerType()),
@@ -193,11 +194,6 @@ CUCKOO_SEGMENT_SCHEMA = T.StructType([
     T.StructField("slots", T.IntegerType()),
     T.StructField("blob", T.BinaryType()),
 ])
-
-
-def _seg_of(col, nseg: int):
-    from .seen import segment_of
-    return segment_of(col, nseg)
 
 
 def _key_hash(col):
@@ -232,7 +228,7 @@ def build_cuckoo_segments(
         })
 
     hashed = seen.select(
-        _seg_of(F.col(key), nseg).alias("__seg"), _key_hash(F.col(key)).alias("__h")
+        segment_of(F.col(key), nseg).alias("__seg"), _key_hash(F.col(key)).alias("__h")
     )
     return hashed.groupBy("__seg").applyInPandas(_build, schema=CUCKOO_SEGMENT_SCHEMA)
 
@@ -248,59 +244,9 @@ def cuckoo_segments_sizing(segments: DataFrame) -> tuple[int, int, int] | None:
     return int(row["nseg"]), int(row["nbuckets"]), int(row["slots"])
 
 
-def _apply_keys_to_segments(
-    segments: DataFrame, keys: DataFrame, key: str, op: str,
-    per_seg_capacity: int, slots: int,
-) -> DataFrame:
-    """Cogroup each segment with its own keys and insert/delete them —
-    the incremental-maintenance step. A key group with no segment row
-    creates a fresh filter on insert (and is a no-op on delete)."""
-    sizing = cuckoo_segments_sizing(segments)
-    nseg = sizing[0] if sizing is not None else 64
-
-    def _merge(kdf: pd.DataFrame, sdf: pd.DataFrame) -> pd.DataFrame:
-        if len(sdf) == 0 and (op == "delete" or len(kdf) == 0):
-            return pd.DataFrame(columns=["seg", "nseg", "nbuckets", "slots", "blob"])
-        if len(sdf) == 0:
-            cf = CuckooFilter(per_seg_capacity, slots_per_bucket=slots)
-            seg = int(kdf["__seg"].iloc[0])
-            ns = nseg
-        else:
-            cf = CuckooFilter.from_bytes(
-                sdf["blob"].iloc[0], int(sdf["nbuckets"].iloc[0]), int(sdf["slots"].iloc[0])
-            )
-            seg = int(sdf["seg"].iloc[0])
-            ns = int(sdf["nseg"].iloc[0])
-        if len(kdf):
-            if op == "insert":
-                cf.insert_hashes(_u64(kdf["__h"]))
-            else:
-                cf.delete_hashes(_u64(kdf["__h"]))
-        return pd.DataFrame({
-            "seg": [seg], "nseg": [ns], "nbuckets": [cf.nbuckets],
-            "slots": [cf.slots], "blob": [cf.to_bytes()],
-        })
-
-    hashed = keys.select(
-        _seg_of(F.col(key), nseg).alias("__seg"), _key_hash(F.col(key)).alias("__h")
-    )
-    return (
-        hashed.groupBy("__seg")
-        .cogroup(segments.groupBy("seg"))
-        .applyInPandas(_merge, schema=CUCKOO_SEGMENT_SCHEMA)
-    )
-
-
-def insert_into_cuckoo_segments(
-    segments: DataFrame, delta: DataFrame, key: str = "url_hash",
-    per_seg_capacity: int = 15_625, slots: int = 4,
-) -> DataFrame:
-    return _apply_keys_to_segments(segments, delta, key, "insert", per_seg_capacity, slots)
-
-
 def delete_from_cuckoo_segments(
     segments: DataFrame, expired: DataFrame, key: str = "url_hash",
-    live: DataFrame | None = None, rebuild_counter=None,
+    live: DataFrame | None = None,
 ) -> DataFrame:
     """TTL recrawl: evict the expired keys' fingerprints from their own
     segments — those URLs read as definitely-unseen again, no rebuild.
@@ -319,29 +265,24 @@ def delete_from_cuckoo_segments(
     COMPLETE post-delete membership, since a rebuilt segment contains
     exactly those keys. Without ``live`` the unguarded single-copy
     delete runs (callers that tolerate ~n²/2¹⁶/nbuckets re-fetches).
-
-    ``rebuild_counter`` (optional Spark accumulator) is incremented once
-    per segment that had to rebuild — observability for soak runs; task
-    retries/speculation can overcount, so it is reporting-grade, not an
-    exactness input."""
-    if live is None:
-        return _apply_keys_to_segments(segments, expired, key, "delete", 64, 4)
+    A segment with no row stays absent: there is nothing to delete from
+    and no membership state for live keys to lose."""
     sizing = cuckoo_segments_sizing(segments)
     nseg = sizing[0] if sizing is not None else 64
 
     def _tag(df: DataFrame, is_live: int) -> DataFrame:
         return df.select(
-            _seg_of(F.col(key), nseg).alias("__seg"),
+            segment_of(F.col(key), nseg).alias("__seg"),
             _key_hash(F.col(key)).alias("__h"),
             F.lit(is_live).alias("__live"),
         )
 
-    keys = _tag(expired, 0).unionByName(_tag(live, 1))
+    keys = _tag(expired, 0)
+    if live is not None:
+        keys = keys.unionByName(_tag(live, 1))
 
     def _merge(kdf: pd.DataFrame, sdf: pd.DataFrame) -> pd.DataFrame:
         if len(sdf) == 0:
-            # no filter for this segment: delete is a no-op, and there
-            # is no membership state for live keys to lose
             return pd.DataFrame(columns=["seg", "nseg", "nbuckets", "slots", "blob"])
         cf = CuckooFilter.from_bytes(
             sdf["blob"].iloc[0], int(sdf["nbuckets"].iloc[0]), int(sdf["slots"].iloc[0])
@@ -362,8 +303,6 @@ def delete_from_cuckoo_segments(
                 fresh.count, fresh.max_kicks, fresh.stash = 0, 500, []
                 fresh.insert_hashes(lh)
                 cf = fresh
-                if rebuild_counter is not None:
-                    rebuild_counter.add(1)
         return pd.DataFrame({
             "seg": [int(sdf["seg"].iloc[0])], "nseg": [int(sdf["nseg"].iloc[0])],
             "nbuckets": [cf.nbuckets], "slots": [cf.slots], "blob": [cf.to_bytes()],
@@ -405,7 +344,7 @@ def probe_cuckoo_segmented(
         return out
 
     withh = candidates.withColumns({
-        "__seg": _seg_of(F.col(key), nseg),
+        "__seg": segment_of(F.col(key), nseg),
         "__h": _key_hash(F.col(key)),
     })
     return (
@@ -427,15 +366,13 @@ def filter_unseen_cuckoo_segmented(
     definite-new skip the anti-join, might-contain rows are confirmed
     against ``active_seen`` (the seen set MINUS expired keys — with TTL
     recrawl the filter may legitimately contain nothing for an expired
-    key, and a stale might-contain is caught by the exact join)."""
+    key, and a stale might-contain is caught by the exact join). The
+    confirm is the bloom's single conditional anti-join
+    (seen.confirm_unseen), so the cogroup probe runs once."""
     if segments is None:
         segments = build_cuckoo_segments(active_seen, key=key, nseg=nseg, capacity=capacity)
         probe_nseg: int | None = nseg
     else:
         probe_nseg = None
     probed = probe_cuckoo_segmented(candidates, segments, key=key, nseg=probe_nseg)
-    definite_new = probed.filter(~F.col("__maybe_seen")).drop("__maybe_seen")
-    maybe = probed.filter(F.col("__maybe_seen")).drop("__maybe_seen")
-    from .seen import filter_unseen_exact
-    confirmed_new = filter_unseen_exact(maybe, active_seen, key)
-    return definite_new.unionByName(confirmed_new)
+    return confirm_unseen(probed, active_seen, key)

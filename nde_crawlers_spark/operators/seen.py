@@ -110,8 +110,8 @@ def write_seen_bucketed(seen: DataFrame, table: str, buckets: int = 64, key: str
 # there the anti-join must scan + shuffle-hash the giant seen side
 # every round, while the bloom probe touches only candidate-partition-
 # sized segment slices and routes the (mostly definite-new) majority
-# around the join entirely. The crawl keeps use_bloom on because its
-# per-round candidates << seen-total matches that regime.
+# around the join entirely. The crawl uses it because its per-round
+# candidates << seen-total matches that regime.
 
 # `nseg` (the segment-count the table was built with) is PERSISTED in
 # every row: probe routing hashes key -> segment with it, so a probe
@@ -119,7 +119,7 @@ def write_seen_bucketed(seen: DataFrame, table: str, buckets: int = 64, key: str
 # produce FALSE NEGATIVES (candidates hashed to the wrong segment skip
 # the exact confirm). Recording it makes the table self-describing —
 # probes route by the TABLE's nseg, and resume paths detect a config
-# change and rebuild (plans/crawl.py) instead of mis-probing.
+# change and rebuild (maintain_bloom_segments) instead of mis-probing.
 SEGMENT_SCHEMA = T.StructType([
     T.StructField("seg", T.IntegerType()),
     T.StructField("nseg", T.IntegerType()),
@@ -214,6 +214,41 @@ def or_bloom_segments(a: DataFrame, b: DataFrame) -> DataFrame:
     return a.unionByName(b).groupBy("seg").applyInPandas(_merge, schema=SEGMENT_SCHEMA)
 
 
+def maintain_bloom_segments(
+    segments: DataFrame | None,
+    sizing: tuple[int, int, int] | None,
+    seen: DataFrame,
+    delta: DataFrame,
+    total: int,
+    key: str = "url_hash",
+    nseg: int = 64,
+    expected: int = 1_000_000,
+    fpp: float = 0.01,
+) -> DataFrame:
+    """The segment table after ``delta``'s keys join ``seen``: the
+    persisted ``segments`` OR the delta's segments, built with the
+    table's exact geometry (``sizing``, as read by ``segments_sizing``).
+
+    Rebuilt from ``seen`` UNION ``delta`` instead when (a) there is no
+    usable table (``sizing`` is None: first round, empty table, or a
+    layout without the nseg column), (b) the table's segment count
+    differs from ``nseg`` (OR-ing would mis-route keys), or (c) the
+    committed key count ``total`` has outgrown the table's bit arrays
+    (fpp would blow past budget). Rebuilds size for 2x ``total``, so
+    growth triggers amortized-O(1) doubling rebuilds, never a per-round
+    resize."""
+    need_nbits, _ = _seg_params(max(expected, total), nseg, fpp)
+    if sizing is not None and sizing[0] == nseg and sizing[1] >= need_nbits:
+        delta_segments = build_bloom_segments(
+            delta, key=key, nseg=nseg, fpp=fpp, sizing=(sizing[1], sizing[2])
+        )
+        return or_bloom_segments(segments, delta_segments)
+    return build_bloom_segments(
+        seen.select(key).unionByName(delta.select(key)), key=key, nseg=nseg,
+        expected=max(expected, 2 * total), fpp=fpp,
+    )
+
+
 def probe_bloom_segmented(
     candidates: DataFrame, segments: DataFrame, key: str = "url_hash",
     nseg: int | None = None,
@@ -227,8 +262,9 @@ def probe_bloom_segmented(
     ``nseg`` defaults to the SEGMENT TABLE's own recorded segment count
     (``segments_sizing``) — routing with any other value would hash
     candidates into the wrong segment and produce false negatives, so
-    passing it explicitly is only for freshly-built, un-persisted
-    tables whose geometry the caller just chose."""
+    passing it explicitly is only for freshly-built tables whose
+    geometry the caller just chose, or for a persisted table whose
+    recorded count the caller already read (saves the read's job)."""
     if nseg is None:
         sizing = segments_sizing(segments)
         # empty table -> any routing yields "no segment row" = not seen
@@ -264,12 +300,38 @@ def probe_bloom_segmented(
     )
 
 
+def confirm_unseen(probed: DataFrame, seen: DataFrame, key: str = "url_hash") -> DataFrame:
+    """The exact step behind a membership prefilter: drop the
+    ``__maybe_seen`` rows whose key is in ``seen``, keep the rest.
+
+    ONE conditional anti-join instead of the two-branch union
+    (definite_new UNION (maybe ANTI seen)): the union references
+    ``probed`` twice, and Spark has no operator-level CSE above the
+    exchange — the ENTIRE cogroup probe (candidate shuffle + Arrow round
+    trip + filter compute) would execute once per branch. A definite-new
+    row matches no seen row because its ``__maybe_seen`` conjunct is
+    false, so the anti-join keeps it; a maybe row survives iff its key
+    is absent. Same row multiset, probe runs once. At the 10^10 design
+    point definite-new rows pass through the anti-join's exchange (one
+    narrow shuffle) instead of a second full probe. No distinct: the
+    output is invariant to right-side multiplicity (filter_unseen_exact)."""
+    seen_keys = seen.select(F.col(key).alias("__seen_key"))
+    return (
+        probed.join(
+            seen_keys,
+            (F.col(key) == F.col("__seen_key")) & F.col("__maybe_seen"),
+            "left_anti",
+        )
+        .drop("__maybe_seen")
+    )
+
+
 def filter_unseen_bloom_segmented(
     candidates: DataFrame,
     seen: DataFrame,
     segments: DataFrame | None = None,
     key: str = "url_hash",
-    nseg: int = 64,
+    nseg: int | None = None,
     expected: int = 1_000_000,
     fpp: float = 0.01,
 ) -> DataFrame:
@@ -281,37 +343,14 @@ def filter_unseen_bloom_segmented(
 
     ``segments`` is the persisted incremental table when the caller
     maintains one (the crawl plan does, per round, beside the seen
-    table); built from ``seen`` on the fly otherwise. A persisted table
-    is probed with ITS OWN recorded segment count (self-describing
-    schema), never the caller's — a config change between build and
-    probe therefore cannot mis-route candidates."""
+    table); built from ``seen`` with ``nseg`` segments (default 64)
+    otherwise. A persisted table is probed with ITS OWN recorded segment
+    count (self-describing schema): leave ``nseg`` None to read it from
+    the table, or pass the count the caller already read with
+    ``segments_sizing`` — never a configured value, which could
+    mis-route candidates after a config change."""
     if segments is None:
+        nseg = nseg or 64
         segments = build_bloom_segments(seen, key=key, nseg=nseg, expected=expected, fpp=fpp)
-        probe_nseg: int | None = nseg
-    else:
-        probe_nseg = None  # derive from the table's recorded geometry
-    probed = probe_bloom_segmented(candidates, segments, key=key, nseg=probe_nseg)
-    # ONE conditional anti-join instead of the r8 two-branch union
-    # (definite_new ∪ (maybe ANTI seen)): the union referenced `probed`
-    # twice, and Spark has no operator-level CSE above the exchange —
-    # the ENTIRE cogroup probe (candidate shuffle + Arrow round trip +
-    # bloom compute) executed once per branch. Folding the branch into
-    # the anti-join condition (a definite-new row matches no seen row
-    # because its __maybe_seen conjunct is false, so anti keeps it; a
-    # maybe row survives iff its key is absent) keeps the identical row
-    # multiset while the probe runs exactly once. Cost shift at the
-    # 10^10 design point: definite-new rows now pass through the
-    # anti-join's exchange (one extra narrow shuffle) instead of
-    # through a second full probe (shuffle + Python) — strictly less
-    # work in both regimes.
-    # no distinct: anti-join output is invariant to right-side
-    # multiplicity (see filter_unseen_exact)
-    seen_keys = seen.select(F.col(key).alias("__seen_key"))
-    return (
-        probed.join(
-            seen_keys,
-            (F.col(key) == F.col("__seen_key")) & F.col("__maybe_seen"),
-            "left_anti",
-        )
-        .drop("__maybe_seen")
-    )
+    probed = probe_bloom_segmented(candidates, segments, key=key, nseg=nseg)
+    return confirm_unseen(probed, seen, key)

@@ -39,7 +39,7 @@ import os
 import shutil
 import time
 from collections.abc import Callable, Iterator
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -47,7 +47,6 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..functions import urls as U
-from ..operators import cuckoo as CK
 from ..operators import frontier as FR
 from ..operators import seen as SN
 from ..operators.fetch import fetch_parse
@@ -73,30 +72,20 @@ class CrawlConfig:
     max_attempts: int = 3
     discovered_priority: int = 5
     host_buckets: int = U.DEFAULT_HOST_BUCKETS
+    # TTL recrawl inside the loop (figshare EXPIRE analog,
+    # figshare_oai-pmh/files/sql_database.py:75): a key first seen in
+    # round f EXPIRES at round f + recrawl_ttl_rounds — it leaves the
+    # ACTIVE seen set, so the URL reads as unseen again when
+    # re-discovered. Expiry is a pure function of (first_seen_round,
+    # current round), so resume reconstruction recomputes the identical
+    # active set at any parallelism. None (default) = keys never expire.
+    recrawl_ttl_rounds: int | None = None
     # segmented bloom prefilter in front of the seen anti-join: per-
     # url_hash-bucket bloom segments, built executor-side, persisted in
     # each round's commit beside the seen delta and maintained
     # INCREMENTALLY (segments(r) = segments(r-1) OR build(new_seen_r)) —
     # the north rule's partitioned URL-seen filter; no driver-side
     # combine anywhere (operators/seen.py)
-    use_bloom: bool = True
-    # which partitioned membership filter fronts the seen anti-join:
-    # "bloom" (append-only, OR-maintained) or "cuckoo" (deletable —
-    # the TTL-recrawl path, operators/cuckoo.py). Both share the
-    # segment-count / design-capacity knobs below; use_bloom=False
-    # disables the prefilter entirely (exact anti-join only).
-    seen_filter: str = "bloom"
-    # TTL recrawl inside the loop (figshare EXPIRE analog,
-    # figshare_oai-pmh/files/sql_database.py:75): a key first seen in
-    # round f EXPIRES at round f + recrawl_ttl_rounds — it leaves the
-    # ACTIVE seen set (the URL reads as unseen again when re-discovered)
-    # and, with seen_filter="cuckoo", its fingerprint is deleted from
-    # the persisted segments under the live-key guard
-    # (operators/cuckoo.py::delete_from_cuckoo_segments). Expiry is a
-    # pure function of (first_seen_round, current round), so resume
-    # reconstruction recomputes the identical active set at any
-    # parallelism. None (default) = keys never expire.
-    recrawl_ttl_rounds: int | None = None
     bloom_segments: int = 64         # segment count (10^10 design point: 4096)
     bloom_expected: int = 1_000_000  # TOTAL expected keys across segments
     bloom_fpp: float = 0.01
@@ -152,7 +141,6 @@ class CrawlConfig:
     # the callable also exposes ``robots_txt(host) -> str``, robots
     # bodies come from it too (_update_robots).
     fetcher: Callable[[str], dict] | None = None
-    extra: dict = field(default_factory=dict)
 
 
 class ConcurrentRunError(RuntimeError):
@@ -179,9 +167,6 @@ class CrawlRun:
         # — a deliberate overcount that only makes capacity rebuilds fire
         # earlier, never lets the filter overload.
         self._seen_total = 0
-        # guarded-delete observability: +1 per segment rebuilt because a
-        # fingerprint collision evicted a live key (reporting-grade)
-        self.cuckoo_rebuilds = spark.sparkContext.accumulator(0)
         os.makedirs(run_dir, exist_ok=True)
 
     # ---------- single-flight lock ----------
@@ -345,60 +330,34 @@ class CrawlRun:
         # expiry idempotent across resume at any parallelism. A key
         # re-fetched after expiry re-enters new_seen with the current
         # round, so only its newest row survives the horizon filter.
-        expired_new = None
+        # The bloom is not pruned on expiry: an expired key's maybe-seen
+        # answer is overruled by the exact confirm against this set.
         if cfg.recrawl_ttl_rounds is not None:
-            horizon = r - cfg.recrawl_ttl_rounds
-            if horizon >= 0:
-                # rows hitting the horizon EXACTLY this round drive the
-                # segment delete below (earlier rows were deleted by
-                # earlier rounds; committed segments persist post-delete)
-                expired_new = seen.filter(F.col("first_seen_round") == F.lit(horizon))
-                seen = seen.filter(F.col("first_seen_round") > F.lit(horizon))
+            seen = seen.filter(
+                F.col("first_seen_round") > F.lit(r - cfg.recrawl_ttl_rounds)
+            )
 
-        # unseen filter: candidates never enqueued before. With
-        # use_bloom, candidates are probed against the PREVIOUS round's
-        # persisted bloom-segment table (each candidate against its own
-        # segment only); definite-new rows skip the anti-join entirely,
-        # might-contain rows are confirmed exactly — identical output
-        # set either way, at any parallelism.
-        mode = cfg.seen_filter if cfg.use_bloom else "exact"
-        seg_table = {"bloom": "bloom_segments", "cuckoo": "cuckoo_segments"}.get(mode)
-        prev_segments = None
-        if seg_table and r > 0 and os.path.isdir(
-            os.path.join(self._rdir(r - 1), seg_table)
-        ):
-            prev_segments = self._read(r - 1, seg_table)
-            # a table from before the self-describing schema (no nseg
-            # column) cannot be probed safely — its routing geometry is
-            # unknown; drop it and probe/rebuild from the full seen set
-            if "nseg" not in prev_segments.columns:
+        # unseen filter: candidates are probed against the PREVIOUS
+        # round's persisted bloom-segment table (each candidate against
+        # its own segment only); definite-new rows skip the exact check,
+        # might-contain rows are confirmed against the active seen set —
+        # identical output set at any parallelism. The table's geometry
+        # is read ONCE here: it routes the probe and drives this round's
+        # maintenance below. No geometry (round 0, an empty table, a
+        # layout without the nseg column) = probe a table built from
+        # ``seen`` and rebuild at commit.
+        prev_segments, sizing = None, None
+        seg_dir = os.path.join(self._rdir(r - 1), "bloom_segments")
+        if r > 0 and os.path.isdir(seg_dir):
+            prev_segments = self._read(r - 1, "bloom_segments")
+            sizing = SN.segments_sizing(prev_segments)
+            if sizing is None:
                 prev_segments = None
-        ttl_deleted_segments = None
-        if mode == "cuckoo" and prev_segments is not None and expired_new is not None:
-            # evict this round's newly-expired fingerprints BEFORE the
-            # probe, under the live-key guard (live = the active seen
-            # set — the complete post-delete membership). Cached: the
-            # post-delete table feeds both the probe and the insert/
-            # commit below, and the guarded delete is the expensive step.
-            prev_segments = CK.delete_from_cuckoo_segments(
-                prev_segments, expired_new.select("url_hash"),
-                live=seen.select("url_hash"),
-                rebuild_counter=self.cuckoo_rebuilds,
-            ).cache()
-            ttl_deleted_segments = prev_segments
-        if mode == "bloom":
-            unseen = SN.filter_unseen_bloom_segmented(
-                cand, seen, segments=prev_segments, nseg=cfg.bloom_segments,
-                expected=cfg.bloom_expected, fpp=cfg.bloom_fpp,
-            )
-        elif mode == "cuckoo":
-            unseen = CK.filter_unseen_cuckoo_segmented(
-                cand, seen, segments=prev_segments, nseg=cfg.bloom_segments,
-                capacity=cfg.bloom_expected,
-            )
-        else:
-            unseen = SN.filter_unseen_exact(cand, seen)
-        unseen = unseen.cache()
+        unseen = SN.filter_unseen_bloom_segmented(
+            cand, seen, segments=prev_segments,
+            nseg=sizing[0] if sizing is not None else cfg.bloom_segments,
+            expected=cfg.bloom_expected, fpp=cfg.bloom_fpp,
+        ).cache()
         new_seen = unseen.select("url_hash").withColumn("first_seen_round", F.lit(r))
 
         allowed = FR.robots_filter(unseen, robots)
@@ -577,72 +536,20 @@ class CrawlRun:
             (robots.coalesce(8), "robots_cache"),
             (host_state.coalesce(8), "host_state"),
             (lineage.coalesce(8), "lineage"),
-        ]
-        if mode == "cuckoo":
-            # incremental maintenance, cuckoo form: insert the round's
-            # delta fingerprints into their own segments (cogroup); a
-            # geometry change or load-factor breach (committed keys past
-            # ~80% of table capacity — eviction walks degrade and spill
-            # to the stash) rebuilds at 2x headroom like the bloom path.
-            seen_total = self._seen_total + n_unseen
-            sizing = (
-                CK.cuckoo_segments_sizing(prev_segments)
-                if prev_segments is not None else None
-            )
-            if sizing is not None:
-                cap_total = int(sizing[1] * sizing[2] * sizing[0] / 1.25)
-                if sizing[0] != cfg.bloom_segments or seen_total > 0.8 * cap_total:
-                    prev_segments, sizing = None, None
-            if prev_segments is not None and sizing is not None:
-                new_segments = CK.insert_into_cuckoo_segments(
-                    prev_segments, new_seen.select("url_hash"),
-                    per_seg_capacity=max(int(sizing[1] * sizing[2] / 1.25), 64),
-                    slots=sizing[2],
-                )
-            else:
-                new_segments = CK.build_cuckoo_segments(
-                    seen.select("url_hash").unionByName(new_seen.select("url_hash")),
-                    nseg=cfg.bloom_segments,
-                    capacity=max(cfg.bloom_expected, 2 * seen_total),
-                )
-            writes.append((new_segments.coalesce(8), "cuckoo_segments"))
-        elif cfg.use_bloom:
-            # incremental maintenance: this round's segment table =
-            # previous table OR the delta's segments — committed with the
-            # round, so a resumed run picks up exactly the filter state
-            # matching its seen set. The table is REBUILT from the full
-            # seen-through-r set instead of OR-ed when (a) no previous
-            # table exists (round 0, resume across a layout change),
-            # (b) the configured segment count changed (the persisted
-            # nseg disagrees — OR-ing would mis-route keys), or (c) the
-            # committed key count has outgrown the persisted bit-array
-            # sizing (fpp would blow past budget). Rebuilds size for
-            # 2x the current count, so growth triggers amortized-O(1)
-            # doubling rebuilds, never a per-round resize.
-            seen_total = self._seen_total + n_unseen
-            need_nbits, _ = SN._seg_params(
-                max(cfg.bloom_expected, seen_total), cfg.bloom_segments, cfg.bloom_fpp
-            )
-            sizing = SN.segments_sizing(prev_segments) if prev_segments is not None else None
-            if sizing is not None and (
-                sizing[0] != cfg.bloom_segments or sizing[1] < need_nbits
-            ):
-                prev_segments, sizing = None, None
-            if prev_segments is not None and sizing is not None:
-                # delta carries the persisted table's exact geometry
-                delta_segments = SN.build_bloom_segments(
-                    new_seen, nseg=sizing[0], fpp=cfg.bloom_fpp,
-                    sizing=(sizing[1], sizing[2]),
-                )
-                new_segments = SN.or_bloom_segments(prev_segments, delta_segments)
-            else:
-                new_segments = SN.build_bloom_segments(
-                    seen.select("url_hash").unionByName(new_seen.select("url_hash")),
-                    nseg=cfg.bloom_segments,
-                    expected=max(cfg.bloom_expected, 2 * seen_total),
+            # incremental maintenance: previous table OR the delta's
+            # segments (or a 2x-headroom rebuild, see
+            # maintain_bloom_segments) — committed with the round, so a
+            # resumed run picks up exactly the filter state matching its
+            # seen set
+            (
+                SN.maintain_bloom_segments(
+                    prev_segments, sizing, seen, new_seen, self._seen_total + n_unseen,
+                    nseg=cfg.bloom_segments, expected=cfg.bloom_expected,
                     fpp=cfg.bloom_fpp,
-                )
-            writes.append((new_segments.coalesce(8), "bloom_segments"))
+                ).coalesce(8),
+                "bloom_segments",
+            ),
+        ]
         if cfg.frontier_deltas:
             # O(delta) persistence: what entered and what left the
             # frontier this round; periodic compaction bounds the
@@ -669,15 +576,10 @@ class CrawlRun:
             "outlinks": int(fstats["out"] or 0),
             "wall_s": round(time.monotonic() - t0, 3),
         }
-        if cfg.recrawl_ttl_rounds is not None:
-            # cumulative guarded-delete rebuild count as of this commit
-            meta["cuckoo_rebuilds_total"] = self.cuckoo_rebuilds.value
         self._commit(r, meta)
         self._seen_total += n_unseen
         for df in (robots, frontier_all, selected, fetched, unseen):
             df.unpersist()
-        if ttl_deleted_segments is not None:
-            ttl_deleted_segments.unpersist()
         return meta
 
     # ---------- state reconstruction (resume) ----------

@@ -128,8 +128,8 @@ def test_crawl_frontier_delta_mode_matches_oracle(spark, oracle):
 
 
 def test_crawl_order_independent_of_partitioning(spark, oracle):
-    """Same crawl at a different shuffle-partition count, salt factor and
-    bloom prefilter: byte-identical ordering/seen/docs — the sandbox
+    """Same crawl at a different shuffle-partition count and salt
+    factor: byte-identical ordering/seen/docs — the sandbox
     proxy for N-vs-4N executor determinism (the full local[8]/local[32]
     two-process evidence lives in bench.py)."""
     old = spark.conf.get("spark.sql.shuffle.partitions")
@@ -138,7 +138,7 @@ def test_crawl_order_independent_of_partitioning(spark, oracle):
         run = CrawlRun(
             spark, tempfile.mkdtemp(prefix="crawl_p_"),
             CrawlConfig(num_hosts=N_HOSTS, round_seconds=2, max_rounds=ROUNDS,
-                        salt_factor=3, use_bloom=True),
+                        salt_factor=3),
         )
         run.run(seeds=_seed_df(spark))
         _check_against_oracle(run, oracle)
@@ -181,15 +181,14 @@ def test_crawl_bloom_segments_equal_full_rebuild(spark, oracle):
     """The round-committed incremental bloom-segment table (segments(r)
     = segments(r-1) OR build(delta_r)) must be BYTE-identical to
     rebuilding from the crawl's full seen set — the invariant that lets
-    each round commit only its delta. Also pins that the e2e path runs
-    bloom-ON (CrawlConfig default) and still matches the oracle."""
+    each round commit only its delta. Also pins that the default-config
+    crawl still matches the oracle."""
     import os
 
     from nde_crawlers_spark.operators import seen as SN
 
     d = tempfile.mkdtemp(prefix="crawl_bl_")
     cfg = CrawlConfig(num_hosts=N_HOSTS, round_seconds=2, max_rounds=ROUNDS)
-    assert cfg.use_bloom  # bloom is the shipped default
     run = CrawlRun(spark, d, cfg)
     run.run(seeds=_seed_df(spark))
     _check_against_oracle(run, oracle)
@@ -426,55 +425,25 @@ def test_autothrottle_fast_host_budget_grows_from_start_delay(spark):
         assert at[h] > 1000.0, (h, at[h])
 
 
-def test_crawl_cuckoo_seen_filter_matches_oracle(spark, oracle):
-    """The crawl's membership prefilter is pluggable (north rule:
-    'partitioned cuckoo/bloom URL-seen filter'): with
-    seen_filter='cuckoo' the rounds maintain per-segment cuckoo tables
-    (insert-per-round, capacity-checked) instead of bloom segments, and
-    the crawl stays byte-identical to the oracle. The committed table
-    has NO false negatives for the full seen set (incremental inserts
-    preserve membership even when eviction walks spill to the stash)."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    from nde_crawlers_spark.operators import cuckoo as CK
-
-    d = tempfile.mkdtemp(prefix="crawl_ck_")
-    cfg = CrawlConfig(num_hosts=N_HOSTS, round_seconds=2, max_rounds=ROUNDS,
-                      seen_filter="cuckoo", bloom_segments=8, bloom_expected=4096)
-    run = CrawlRun(spark, d, cfg)
-    run.run(seeds=_seed_df(spark))
-    _check_against_oracle(run, oracle)
-    last = run.committed_rounds()[-1]
-    segs = spark.read.parquet(os.path.join(d, f"round={last:04d}", "cuckoo_segments"))
-    assert CK.cuckoo_segments_sizing(segs)[0] == 8
-    probed = CK.probe_cuckoo_segmented(run.seen().select("url_hash"), segs)
-    assert probed.filter(~F.col("__maybe_seen")).count() == 0
-    # and no bloom table was written in cuckoo mode
-    assert not os.path.isdir(os.path.join(d, f"round={last:04d}", "bloom_segments"))
-
-
 def test_crawl_recrawl_ttl_in_loop(spark):
     """TTL recrawl INSIDE the crawl loop (cfg.recrawl_ttl_rounds, the
-    figshare EXPIRE analog): keys seen >= ttl rounds ago leave the
-    active seen set and their fingerprints are evicted from the
-    committed cuckoo segments via the guarded delete — so a
+    figshare EXPIRE analog) with the default bloom prefilter: keys seen
+    >= ttl rounds ago leave the active seen set, and the exact confirm
+    against that set overrules the bloom's maybe-seen answer — so a
     re-discovered expired URL is genuinely RE-FETCHED by a later round.
 
     Corpus: a closed ring of 16 URLs over 2 hosts where every page
     links to the next two ring members (ring small enough to wrap within the run) — re-discovery of expired keys
     is guaranteed, unlike the open synthetic URL space. Asserts, for
     BOTH frontier modes (snapshot and delta): re-fetches happen, never
-    before expiry, identical order/seen/docs across modes, expired-and-
-    not-refreshed fingerprints absent from the committed segments while
-    every active key still probes present, and the commit meta carries
-    the guarded-delete rebuild counter."""
+    before expiry, identical order/seen/docs across modes, and every
+    active key probes present in the committed bloom segments (no false
+    negative for the keys the exact confirm relies on)."""
     import os
 
     from pyspark.sql import functions as F
 
-    from nde_crawlers_spark.operators import cuckoo as CK
+    from nde_crawlers_spark.operators import seen as SN
 
     RING, HOSTS, TTL, ROUNDS_TTL = 8, 2, 2, 8
 
@@ -509,12 +478,12 @@ def test_crawl_recrawl_ttl_in_loop(spark):
         d = tempfile.mkdtemp(prefix=f"crawl_ttl_{mode}_")
         cfg = CrawlConfig(
             num_hosts=HOSTS, round_seconds=2, max_rounds=ROUNDS_TTL,
-            seen_filter="cuckoo", bloom_segments=4, bloom_expected=2048,
+            bloom_segments=4, bloom_expected=2048,
             recrawl_ttl_rounds=TTL, autothrottle=False,
             fetcher=RingFetcher(), **extra,
         )
         run = CrawlRun(spark, d, cfg)
-        metas = run.run(seeds=seeds)
+        run.run(seeds=seeds)
         order = [
             (r["round"], r["url_hash"])
             for r in run.crawl_order().select("round", "url_hash").collect()
@@ -528,24 +497,16 @@ def test_crawl_recrawl_ttl_in_loop(spark):
         for h, rs in by_key.items():
             for a, b in zip(rs, rs[1:]):
                 assert b - a >= TTL, (h, rs, "re-fetched before expiry")
-        # guarded-delete observability in the commit meta
-        assert all("cuckoo_rebuilds_total" in m for m in metas[TTL:])
-        assert metas[-1]["cuckoo_rebuilds_total"] >= 0
-        # committed segments: active keys all present; keys whose NEWEST
-        # sighting has expired are deleted (deterministic corpus ->
-        # deterministic probe outcome)
+        # committed segments: every key active at the last round (its
+        # NEWEST sighting inside the TTL horizon) probes present
         last = run.committed_rounds()[-1]
-        segs = spark.read.parquet(os.path.join(d, f"round={last:04d}", "cuckoo_segments"))
+        segs = spark.read.parquet(os.path.join(d, f"round={last:04d}", "bloom_segments"))
         newest = run.seen().groupBy("url_hash").agg(
             F.max("first_seen_round").alias("fsr"))
-        horizon = last - TTL
-        active = newest.filter(F.col("fsr") > horizon)
-        expired = newest.filter(F.col("fsr") <= horizon)
-        assert expired.count() > 0
-        probed_active = CK.probe_cuckoo_segmented(active.select("url_hash"), segs)
-        assert probed_active.filter(~F.col("__maybe_seen")).count() == 0
-        probed_exp = CK.probe_cuckoo_segmented(expired.select("url_hash"), segs)
-        assert probed_exp.filter(F.col("__maybe_seen")).count() == 0
+        active = newest.filter(F.col("fsr") > last - TTL)
+        assert active.count() > 0
+        probed = SN.probe_bloom_segmented(active.select("url_hash"), segs)
+        assert probed.filter(~F.col("__maybe_seen")).count() == 0
         results[mode] = (
             sorted(order),
             {r["url_hash"] for r in run.seen().collect()},

@@ -250,32 +250,6 @@ def test_robots_txt_retries_transient_503():
         srv.shutdown()
 
 
-def test_crawl_cuckoo_and_http_compose(spark, corpus_server):
-    """Feature composition: the cuckoo seen-filter and the HTTP fetcher
-    are orthogonal config axes — a crawl with BOTH (real sockets, TTL-
-    capable segmented seen store) still produces byte-identical outputs
-    to the all-default in-process run with the same scheduling config
-    (AutoThrottle OFF, see module docstring)."""
-    seeds = make_seeds(50, N_HOSTS)
-    seed_df = spark.createDataFrame(
-        [(s["url"], s["priority"]) for s in seeds], ["url", "priority"])
-
-    def _drive(**kw):
-        cfg = CrawlConfig(num_hosts=N_HOSTS, round_seconds=2, max_rounds=2,
-                          autothrottle=False, **kw)
-        run = CrawlRun(spark, tempfile.mkdtemp(prefix="crawl_ck_http_"), cfg)
-        run.run(seeds=seed_df)
-        order = [(r["round"], r["priority"], r["seq"], r["url_hash"])
-                 for r in run.crawl_order()
-                 .select("round", "priority", "seq", "url_hash").collect()]
-        return order, {r["url_hash"] for r in run.seen().collect()}
-
-    combo = _drive(seen_filter="cuckoo",
-                   fetcher=LoopbackProxyFetcher(corpus_server, max_attempts=3))
-    plain = _drive()
-    assert combo == plain
-
-
 class _SlowHostHandler(_CorpusHandler):
     """Corpus gateway that sleeps ``slow_s`` before serving any document
     of ``slow_host`` — a genuinely slow origin for the AutoThrottle-ON

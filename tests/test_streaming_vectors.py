@@ -231,3 +231,22 @@ def test_uncommitted_delta_not_served(spark, ingested):
         assert got == want
     finally:
         shutil.rmtree(fake, ignore_errors=True)
+
+
+def test_no_delta_served_before_first_commit(spark, tmp_path):
+    """The crash window before the FIRST checkpoint commit: the stream
+    has created checkpoint/ (commits/ empty) and a batch-0 delta dir is
+    on disk. codes() must serve nothing; only a store with no checkpoint
+    at all (populated out-of-band) falls back to every delta dir."""
+    from nde_crawlers_spark.streaming.vector_ingest import StreamingVectorIngest
+
+    vi = StreamingVectorIngest(spark, str(tmp_path))
+    spark.range(7).selectExpr(
+        "id as vec_id", "transform(sequence(1, 64), i -> 1) as codes",
+        "cast(64 as long) as cs", "cast(64 as long) as nsq",
+    ).write.parquet(os.path.join(vi.root, "codes", "batch=000000"))
+    # out-of-band store: no checkpoint -> every delta dir is served
+    assert vi.codes().count() == 7
+    os.makedirs(os.path.join(vi.root, "checkpoint", "commits"))
+    assert vi.last_committed_batch() is None
+    assert vi.codes().count() == 0
